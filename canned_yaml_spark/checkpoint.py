@@ -71,7 +71,8 @@ def append_manifest(verdicts: DataFrame, manifest_dir: str,
     """Commit completed partitions: one manifest row per partition.
 
     Must be called only after the partitions' violation/verdict/metric
-    rows are durably written.
+    rows are durably written. One file per commit: the frame holds one
+    row per partition, and the manifest is append-only.
     """
     (verdicts
      .select("part_id", "n_rows", "n_violations",
@@ -79,6 +80,7 @@ def append_manifest(verdicts: DataFrame, manifest_dir: str,
              "pass",
              F.lit(run_id).alias("run_id"),
              F.lit(time.time()).alias("completed_at"))
+     .coalesce(1)
      .write.mode("append").parquet(manifest_dir))
 
 
@@ -161,6 +163,26 @@ def append_stream_manifest(verdicts: DataFrame, manifest_dir: str,
              F.lit(batch_id).alias("batch_id"),
              F.lit(stream_id).alias("stream_id"))
      .write.mode("append").parquet(manifest_dir))
+
+
+def drop_uncommitted(spark: SparkSession, path: str,
+                     committed: set[int]) -> None:
+    """Delete path's part_id directories not in `committed`.
+
+    Dynamic overwrite replaces only the partitions a write has rows
+    for, so a sparse output (violations) would otherwise keep rows an
+    earlier run left in a partition this run finds clean."""
+    if not _exists(spark, path):
+        return
+    jvm = spark._jvm                                   # noqa: SLF001
+    conf = spark._jsc.hadoopConfiguration()            # noqa: SLF001
+    root = jvm.org.apache.hadoop.fs.Path(path)
+    fs = root.getFileSystem(conf)
+    keep = {f"part_id={p}" for p in committed}
+    for st in fs.listStatus(root):
+        name = st.getPath().getName()
+        if name.startswith("part_id=") and name not in keep:
+            fs.delete(st.getPath(), True)
 
 
 def write_partitioned(df: DataFrame, path: str) -> None:

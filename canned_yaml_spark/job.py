@@ -24,9 +24,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from canned_yaml_spark import checkpoint, dataset, drift, payload
-from canned_yaml_spark.checks import CheckSuite, Severity
+from canned_yaml_spark.checks import CheckSuite
 from canned_yaml_spark.compile import compile_spec
-from canned_yaml_spark.runner import row_violations
+from canned_yaml_spark.runner import fold_verdicts, row_violations
 
 
 @dataclass
@@ -191,6 +191,20 @@ def run(spark: SparkSession, spec_source: str | dict, clips: DataFrame, *,
     With out_dir set, writes violations/, verdicts/, metrics/ and
     manifest/ under it (partition-atomic, resumable). Without it,
     returns lazy DataFrames only.
+
+    Every output is derived once. The violations union is executed by
+    its write alone; the verdicts are then folded from the written
+    violations table (runner.fold_verdicts), and the manifest commits
+    the written verdict rows carrying this run's id. Dynamic overwrite
+    replaces only the partitions a write has rows for, so before the
+    violations write every partition not committed to the manifest
+    (every partition, without resume) is cleared: a partition this run
+    finds clean then folds to pass even if an earlier run, or another
+    spec, failed it. On a resume the violations table also holds the
+    completed partitions' rows, which the fold drops (it keeps the
+    scope's partitions only); taking those partitions' committed rows
+    as they are relies on checkpoint.py's deterministic-rewrite
+    contract (same data and spec, same rows).
     """
     suite = compile_spec(spec_source, clips.schema)
     run_id = uuid.uuid4().hex[:12]
@@ -221,36 +235,35 @@ def run(spark: SparkSession, spec_source: str | dict, clips: DataFrame, *,
             uv = checkpoint.pending_only(uv, spark,
                                          f"{out_dir}/manifest", "part_id")
             viol = viol.unionByName(uv)
-    # Each family's plan executes once: verdicts aggregate the unified
-    # violations table instead of recomputing the families.
-    base = (scope.groupBy(F.col(part_col).alias("part_id"))
-                 .agg(F.count(F.lit(1)).alias("n_rows")))
-    viol_agg = (viol.groupBy("part_id")
-                    .agg(F.count(F.lit(1)).alias("n_violations"),
-                         F.max("severity").alias("max_severity")))
-    verd = (base.join(viol_agg, "part_id", "left")
-                .select("part_id", "n_rows",
-                        F.coalesce(F.col("n_violations"), F.lit(0))
-                         .alias("n_violations"),
-                        "max_severity",
-                        (F.coalesce(F.col("max_severity"), F.lit(-1))
-                         < int(Severity.ERROR)).alias("pass")))
 
     metrics = dataset.column_stats(scope, list(stats_columns), part_col)
 
     if out_dir:
+        # the fold below reads violations/ back, so clear what earlier
+        # runs left in the partitions this run validates
+        committed = ({r.part_id for r in checkpoint.completed_parts(
+                          spark, f"{out_dir}/manifest").collect()}
+                     if resuming else set())
+        checkpoint.drop_uncommitted(spark, f"{out_dir}/violations",
+                                    committed)
         checkpoint.write_partitioned(viol, f"{out_dir}/violations")
+        # an explicit schema: a run with no violation rows leaves no
+        # files to infer one from
+        viol = spark.read.schema(viol.schema).parquet(f"{out_dir}/violations")
         checkpoint.write_partitioned(metrics, f"{out_dir}/metrics")
-        checkpoint.write_partitioned(
-            verd.withColumn("run_id", F.lit(run_id)), f"{out_dir}/verdicts")
+        verd = fold_verdicts(scope, viol, part_col) \
+            .withColumn("run_id", F.lit(run_id))
+        checkpoint.write_partitioned(verd, f"{out_dir}/verdicts")
+        verd = spark.read.schema(verd.schema).parquet(f"{out_dir}/verdicts")
         # manifest append is the commit point (checkpoint.py)
-        checkpoint.append_manifest(verd, f"{out_dir}/manifest", run_id)
-        verd = spark.read.parquet(f"{out_dir}/verdicts")
-        viol = spark.read.parquet(f"{out_dir}/violations")
+        checkpoint.append_manifest(verd.filter(F.col("run_id") == run_id),
+                                   f"{out_dir}/manifest", run_id)
+    else:
+        verd = fold_verdicts(scope, viol, part_col)
 
-    # ok == "no partition failed": the verdict aggregate already folds
-    # max severity per partition, so this reads the (written) verdicts
-    # table instead of re-executing the violations union.
+    # ok == "no partition failed": the verdicts already fold max
+    # severity per partition, so this reads them (the written table,
+    # with out_dir) instead of re-executing the violations union.
     n_bad = verd.filter(~F.col("pass")).limit(1).count()
     return ValidationResult(violations=viol, verdicts=verd,
                             metrics=metrics, ok=n_bad == 0)

@@ -55,6 +55,8 @@ def prep_run(spark: SparkSession, clips: DataFrame,
        against the distinct violating ids — a frame proportional to
        the defect rate, not the corpus; partition-scoped rows with
        NULL clip_id gate partitions, not clips, and don't quarantine).
+       The verdicts fold every family's violations
+       (runner.fold_verdicts), as job.run's do.
     2. DEDUP (optional): acoustic near-dup pairs (audiofp fingerprint
        LSH + BER verify) → connected components → keep the min-id
        representative per component (dedup.dedup_keep) — the corpus is
@@ -72,7 +74,7 @@ def prep_run(spark: SparkSession, clips: DataFrame,
     """
     from canned_yaml_spark import audiofp, augment, dedup as dd, segment
     from canned_yaml_spark.audio import _MAGIC
-    from canned_yaml_spark.runner import row_verdicts
+    from canned_yaml_spark.runner import fold_verdicts
     from canned_yaml_spark.segment import RAW_BPS
 
     suite = compile_spec(spec_source, clips.schema)
@@ -86,7 +88,7 @@ def prep_run(spark: SparkSession, clips: DataFrame,
                             & F.col("clip_id").isNotNull())
                     .select(F.col("clip_id").alias(id_col)).distinct())
     ok = clips.join(bad_ids, id_col, "left_anti")
-    verdicts = row_verdicts(clips, suite, part_col)
+    verdicts = fold_verdicts(clips, viols, part_col)
 
     # 2 — acoustic dedup, keep-one
     if dedup:

@@ -1,5 +1,7 @@
 """Checkpoint / exact resume (SURVEY.md §2.2 #25)."""
 
+import shutil
+
 import pyspark.sql.functions as F
 
 from canned_yaml_spark import checkpoint, fixtures, job
@@ -67,6 +69,45 @@ def test_resume_catches_cross_partition_duplicates(spark, tmp_path):
     # (part 5) belongs to run 1's committed output, not this run's
     assert ("clip_0000000005", 40) in rows
     assert ("clip_0000000005", 5) not in rows
+
+
+def test_clean_run_commits_without_violation_rows(spark, tmp_path):
+    """A run that writes no violation rows leaves violations/ without
+    data files; reading it back must not need a schema to infer."""
+    out = str(tmp_path / "clean")
+    clips = fixtures.clips_df(spark, 200, inject=False, max_samples=16)
+    spec = {"type": "object", "properties": {
+        "clip_id": {"type": "string", "pattern": "^clip_[0-9]+"}}}
+    r = job.run(spark, spec, clips, out_dir=out)
+    assert r.ok is True
+    assert r.violations.count() == 0
+    assert spark.read.parquet(f"{out}/manifest").count() == 64
+
+
+def test_revalidation_clears_stale_violations(spark, tmp_path):
+    """Verdicts fold the violations read back from disk, so a rerun
+    that finds a partition clean must not count the rows an earlier
+    run wrote there — neither without resume nor after a crash."""
+    out = str(tmp_path / "rerun")
+    clips = fixtures.clips_df(spark, 200, inject=False, max_samples=16)
+    failing = {"type": "object", "properties": {
+        "clip_id": {"type": "string", "pattern": "^clip_[0-9]+$"},
+        "sr_hz": {"type": "integer", "maximum": 1}}}
+    passing = {"type": "object", "properties": {
+        "clip_id": {"type": "string", "pattern": "^clip_[0-9]+"}}}
+    assert job.run(spark, failing, clips, out_dir=out).ok is False
+
+    r = job.run(spark, passing, clips, out_dir=out, resume=False)
+    assert r.ok is True
+    assert r.violations.count() == 0
+    assert r.verdicts.filter(~F.col("pass")).count() == 0
+
+    # a crash before the commit: violations written, manifest not
+    job.run(spark, failing, clips, out_dir=out, resume=False)
+    shutil.rmtree(f"{out}/manifest")
+    r = job.run(spark, passing, clips, out_dir=out)
+    assert r.ok is True
+    assert r.violations.count() == 0
 
 
 def test_manifest_probe_absent_dir(spark, tmp_path):

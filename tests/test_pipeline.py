@@ -61,3 +61,26 @@ def test_prep_speed_family(spark):
                             dedup=False, speed=(10, 9))
     # 4096 samples → (4095*9)//10 + 1 = 3686 → (3686-256)//192+1
     assert res.n_windows == 18
+
+
+def test_prep_verdicts_fold_table_level_violations(spark, tmp_path):
+    # a partition whose only ERROR is table-level (an x-unique
+    # duplicate) fails its verdict, in the result and in the manifest,
+    # as it does in job.run
+    from canned_yaml_spark import audio
+    pcm = bytearray(audio.synth_pcm(4, 16000, 400).tobytes())
+    corpus = spark.createDataFrame(
+        [("clip_1", 0, "pcm_s16le", pcm),
+         ("clip_1", 1, "pcm_s16le", pcm),
+         ("clip_2", 2, "pcm_s16le", pcm)],
+        "clip_id string, part_id int, codec string, bytes binary")
+    spec = {"type": "object", "properties": {
+        "clip_id": {"type": "string", "x-unique": True}}}
+    out = str(tmp_path / "prep_dup")
+    res = pipeline.prep_run(spark, corpus, spec, win=256, hop=192,
+                            dedup=False, out_dir=out, run_id="r1")
+    assert res.n_quarantined == 2
+    want = {0: False, 1: False, 2: True}
+    assert {r.part_id: r["pass"] for r in res.verdicts.collect()} == want
+    m = spark.read.parquet(f"{out}/manifest")
+    assert {r.part_id: r["pass"] for r in m.collect()} == want

@@ -5,7 +5,7 @@ import pyspark.sql.functions as F
 
 from canned_yaml_spark.checks import Severity
 from canned_yaml_spark.runner import (
-    merge_verdicts, row_verdicts, row_violations, with_violations,
+    fold_verdicts, row_verdicts, row_violations, violation_count,
 )
 
 
@@ -51,23 +51,34 @@ def test_verdict_rule(spark, clips, clips_clean, suite):
 
 def test_violations_row_count_equals_k_checks(spark, clips, suite):
     # a row violating k checks yields exactly k violation rows
-    arr = with_violations(clips, suite)
     exploded = row_violations(clips, suite).count()
-    summed = arr.agg(F.sum(F.size("violations"))).collect()[0][0]
+    summed = clips.agg(F.sum(violation_count(suite.row_checks))) \
+                  .collect()[0][0]
     assert exploded == summed
 
 
-def test_merge_verdicts_flips_pass(spark, clips_clean, suite):
-    verd = row_verdicts(clips_clean, suite)
+def test_fold_verdicts_flips_pass(spark, clips_clean, suite):
     extra = spark.createDataFrame(
         [(None, 3, "x-unique.clip_id", int(Severity.ERROR), "dup")],
         "clip_id string, part_id int, rule_id string, severity int, "
         "message string")
-    merged = merge_verdicts(verd, extra)
-    rows = {r.part_id: r for r in merged.collect()}
+    viol = row_violations(clips_clean, suite).unionByName(extra)
+    rows = {r.part_id: r for r in fold_verdicts(clips_clean, viol).collect()}
     assert rows[3]["pass"] is False
     assert rows[3]["n_violations"] == 1
+    assert rows[3]["max_severity"] == int(Severity.ERROR)
     assert all(r["pass"] for p, r in rows.items() if p != 3)
+
+
+def test_row_verdicts_equal_fold_over_row_violations(spark, clips, suite):
+    # the explode-free row verdict is the one fold, restricted to the
+    # row checks
+    fast = row_verdicts(clips, suite)
+    folded = fold_verdicts(clips, row_violations(clips, suite))
+    assert [(f.name, f.dataType) for f in fast.schema] \
+        == [(f.name, f.dataType) for f in folded.schema]
+    assert sorted(fast.collect()) == sorted(folded.collect())
+    assert fast.filter(~F.col("pass")).count() > 0
 
 
 def test_violation_order_matches_reference_walk(spark, suite):
